@@ -10,10 +10,11 @@ files — readers take directories transparently.
 from __future__ import annotations
 
 import os
-from weakref import WeakKeyDictionary
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from snapflow_spark.session import file_stamp, memo, tune
 
 TABLES = [
     "region",
@@ -41,34 +42,23 @@ def table_path(sf_dir: str, name: str) -> str:
 # Per-session memo of CONSTRUCTED DataFrames (lazy plans, never data):
 # spark.read.parquet pays 150-250 ms of driver-side schema inference on
 # every call, and a bench pass constructs the same ten fixture tables
-# hundreds of times. Keyed by (path, mtime) so a rewritten fixture
+# hundreds of times. Stamped with the mtime so a rewritten fixture
 # (tools/gen_scale.py regenerating .scratch tables) is picked up; the
-# WeakKeyDictionary dies with the session. Round 17 (optimization,
+# registry entry dies with the session. Round 17 (optimization,
 # guide §1.2 per-task work / §6 listing): this caches PLANS only —
 # every action on the returned DataFrame still scans the parquet files
 # in full, so bench/oracle runs keep computing from the inputs.
-_TABLE_CACHE: WeakKeyDictionary = WeakKeyDictionary()
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    from snapflow_spark.session import tune
-
     tune(spark)
     path = table_path(sf_dir, name)
-    try:
-        mtime = os.path.getmtime(path)
-    except OSError:
-        mtime = -1.0
-    cache = _TABLE_CACHE.setdefault(spark, {})
-    key = (path, mtime)
-    cached = cache.get(key)
-    if cached is not None:
-        return cached
-    df = _build_table(spark, path, name)
-    cache[key] = df
-    return df
+    return memo(
+        ("catalog.table", path),
+        lambda: _build_table(spark, path, name),
+        owner=spark,
+        stamp=file_stamp(path),
+    )
 
 
 def _build_table(spark: SparkSession, path: str, name: str) -> DataFrame:

@@ -46,10 +46,11 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 from functools import lru_cache
-from weakref import WeakKeyDictionary
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from snapflow_spark.session import memo
 
 #: Snapshot provenance — a curated ICANN-section subset, not the full
 #: ~9k-rule file; see module docstring. Format is the PSL file format
@@ -339,18 +340,17 @@ def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-# Per-SparkContext cache of converted literal Seqs (round 17): py4j's
-# ListConverter ships ONE command PER ELEMENT when a python list
-# crosses the gateway, so even the r17 `_to_seq` form of isin_literals
-# still paid ~580 round trips for the 576-rule PSL exact-2 set — per
-# CALL, and registered_domain_expr makes six such calls. The literal
-# sets are module-level constants, so the converted Seq (immutable on
-# the JVM side; `Column.isin` only reads it) is cached per context and
-# per value-tuple. The WeakKeyDictionary dies with the SparkContext.
-_SEQ_CACHE: "WeakKeyDictionary" = WeakKeyDictionary()
-#: growth bound (r17 advice): each cached Seq pins a JVM reference for
-#: the SparkContext's lifetime; intended only for module-constant sets.
-_SEQ_CACHE_MAX = 256
+# Converted literal Seqs are session-state entries per SparkContext
+# (round 17): py4j's ListConverter ships ONE command PER ELEMENT when a
+# python list crosses the gateway, so even the r17 `_to_seq` form of
+# isin_literals still paid ~580 round trips for the 576-rule PSL
+# exact-2 set — per CALL, and registered_domain_expr makes six such
+# calls. The literal sets are module-level constants, so the converted
+# Seq (immutable on the JVM side; `Column.isin` only reads it) is
+# memoized per context and per value-tuple (session.memo; each entry
+# pins a JVM reference for the context's lifetime, bounded by
+# session.MAX_ENTRIES).
+
 #: join/split separator for the one-command string ship: U+001F unit
 #: separator, which cannot appear in domain labels or blocklist hosts.
 _SEQ_SEP = "\x1f"
@@ -402,20 +402,14 @@ def isin_literals(col: Column, values: list) -> Column:
         ctx = SparkContext._active_spark_context
         if ctx is None:
             raise RuntimeError("no active SparkContext")
-        cache = _SEQ_CACHE.setdefault(ctx, {})
         # key carries the value TYPES too: python's cross-type equality
-        # (True == 1 == 1.0) would otherwise let [1] hit the cached Seq
-        # of [True] and build In() over wrong-typed literals (r17
-        # advice). Bounded: past _SEQ_CACHE_MAX distinct keys the Seq is
-        # built fresh instead of pinning another JVM reference — the
-        # cache is meant for module-constant literal sets (PSL rules,
+        # (True == 1 == 1.0) would otherwise let [1] hit the memoized
+        # Seq of [True] and build In() over wrong-typed literals (r17
+        # advice). Meant for module-constant literal sets (PSL rules,
         # blocklists), not dynamically generated lists.
-        key = tuple((type(v).__name__, v) for v in vals)
-        seq = cache.get(key)
-        if seq is None:
-            seq = _literal_seq(ctx, vals)
-            if len(cache) < _SEQ_CACHE_MAX:
-                cache[key] = seq
+        key = ("psl.seq",) + tuple((type(v).__name__, v) for v in vals)
+        hash(key)  # unhashable values take the public path below
+        seq = memo(key, lambda: _literal_seq(ctx, vals), owner=ctx)
         return ClassicColumn(col._jc.isin(seq))
     except Exception:
         return col.isin(*vals)

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, FloatType, IntegerType, LongType
 
-from snapflow_spark.functions.fragments import memo_fragment
+from snapflow_spark.session import memo
 
 TOKEN_RE = r"\S+"
 
@@ -70,8 +70,8 @@ def bpe_tokens_expr(col: str | Column) -> Column:
     runs / punctuation runs, space-prefixed) — the token-count basis a
     training-data pipeline budgets by. Pure JVM regex."""
     if isinstance(col, str):
-        return memo_fragment(
-            f"text.bpe_tokens|{col}",
+        return memo(
+            ("text.bpe_tokens", col),
             lambda: F.regexp_extract_all(F.col(col), F.lit(BPE_RE), 0),
         )
     return F.regexp_extract_all(col, F.lit(BPE_RE), 0)
@@ -108,12 +108,12 @@ def winnow_fingerprints_expr(hashes: Column, w: int = 4) -> Column:
 def tokens_expr(col: str | Column) -> Column:
     """Whitespace tokenization as a JVM regex — the canonical token
     column every downstream text op builds on. Plain-string inputs are
-    memoized per context (functions/fragments.py): the fragment is a
+    memoized per context (session.memo): the fragment is a
     pure function of the column NAME, and queries rebuild it every
     construction."""
     if isinstance(col, str):
-        return memo_fragment(
-            f"text.tokens|{col}",
+        return memo(
+            ("text.tokens", col),
             lambda: F.regexp_extract_all(F.col(col), F.lit(TOKEN_RE), 0),
         )
     return F.regexp_extract_all(col, F.lit(TOKEN_RE), 0)
@@ -121,8 +121,8 @@ def tokens_expr(col: str | Column) -> Column:
 
 def token_count_expr(col: str | Column) -> Column:
     if isinstance(col, str):
-        return memo_fragment(
-            f"text.token_count|{col}", lambda: F.size(tokens_expr(col))
+        return memo(
+            ("text.token_count", col), lambda: F.size(tokens_expr(col))
         )
     return F.size(tokens_expr(col))
 
@@ -145,8 +145,8 @@ def lang_id_expr(col: str | Column) -> Column:
     argmax wins (ties broken by language code order). Pure Column
     algebra -> whole-stage codegen, no UDF."""
     if isinstance(col, str):
-        return memo_fragment(
-            f"text.lang_id|{col}", lambda: lang_id_expr(F.col(col))
+        return memo(
+            ("text.lang_id", col), lambda: lang_id_expr(F.col(col))
         )
     c = col
     toks = F.regexp_extract_all(F.lower(c), F.lit(r"[\p{L}]+"), 0)
@@ -173,8 +173,8 @@ def quality_score_expr(col: str | Column) -> Column:
     high punctuation ratio, and low stopword ratio (the classic
     pre-training corpus filters), as one codegen expression."""
     if isinstance(col, str):
-        return memo_fragment(
-            f"text.quality_score|{col}",
+        return memo(
+            ("text.quality_score", col),
             lambda: quality_score_expr(F.col(col)),
         )
     c = col
@@ -256,8 +256,8 @@ def fingerprint_expr(col: str | Column, n_chars: int = 64) -> Column:
     """Deterministic document fingerprint: sha2-256 of the
     whitespace-normalized lowercased text — the exact-dedup key."""
     if isinstance(col, str):
-        return memo_fragment(
-            f"text.fingerprint|{col}|{n_chars}",
+        return memo(
+            ("text.fingerprint", col, n_chars),
             lambda: fingerprint_expr(F.col(col), n_chars),
         )
     normalized = F.regexp_replace(F.trim(F.lower(col)), r"\s+", " ")

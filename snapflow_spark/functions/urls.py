@@ -72,13 +72,13 @@ def _isin_lits(col: Column, values) -> Column:
 def host_expr(url: Column | str) -> Column:
     """Lowercased host[:port] of an absolute URL ('' if not one).
     Plain-string inputs memoize the fragment per context (round 18,
-    functions/fragments.py — these towers cost hundreds of py4j round
+    session.memo — these towers cost hundreds of py4j round
     trips per construction and are pure functions of the name)."""
     if isinstance(url, str):
-        from snapflow_spark.functions.fragments import memo_fragment
+        from snapflow_spark.session import memo
 
-        return memo_fragment(
-            f"urls.host|{url}", lambda: host_expr(F.col(url))
+        return memo(
+            ("urls.host", url), lambda: host_expr(F.col(url))
         )
     return F.lower(F.regexp_extract(F.trim(url), r"^[^:/?#]+://([^/?#]+)", 1))
 
@@ -96,12 +96,12 @@ def registered_domain_expr(host: Column | str, psl=None) -> Column:
     pre-round-9 two-level table; hosts that are themselves public
     suffixes (or shorter) pass through unchanged. Plain-string inputs
     over the default/heuristic tables memoize the fragment per context
-    (functions/fragments.py)."""
+    (session.memo)."""
     if isinstance(host, str) and (psl is None or psl == "heuristic"):
-        from snapflow_spark.functions.fragments import memo_fragment
+        from snapflow_spark.session import memo
 
-        return memo_fragment(
-            f"urls.registered_domain|{host}|{psl}",
+        return memo(
+            ("urls.registered_domain", host, psl),
             lambda: registered_domain_expr(F.col(host), psl),
         )
     if psl == "heuristic":
@@ -127,12 +127,12 @@ def normalize_url_expr(url: Column | str) -> Column:
     contract — one codegen expression, NULL-safe (non-URLs normalize
     to their trimmed, de-fragmented self so garbage rows stay
     groupable instead of erroring). Plain-string inputs memoize the
-    fragment per context (functions/fragments.py)."""
+    fragment per context (session.memo)."""
     if isinstance(url, str):
-        from snapflow_spark.functions.fragments import memo_fragment
+        from snapflow_spark.session import memo
 
-        return memo_fragment(
-            f"urls.normalize|{url}", lambda: normalize_url_expr(F.col(url))
+        return memo(
+            ("urls.normalize", url), lambda: normalize_url_expr(F.col(url))
         )
     u = F.trim(F.regexp_replace(_c(url), "#.*$", ""))  # 1. fragment, then trim
     scheme = F.lower(F.regexp_extract(u, r"^([A-Za-z][A-Za-z0-9+.-]*)://", 1))

@@ -56,7 +56,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from snapflow_spark.functions.fragments import memo_fragment
+from snapflow_spark.session import memo
 
 __all__ = [
     "C4_DEFAULTS",
@@ -162,12 +162,10 @@ def c4_signals(
         else C4_POLICY_SUBSTRINGS
     )
     # Per-context memo of the two UNALIASED staging fragments (round
-    # 18, functions/fragments.py — ~200 round trips per construction,
+    # 18, session.memo — ~200 round trips per construction,
     # rebuilt identically per bench rep); aliasing stays per-use.
-    stage_key = (
-        f"c4.stage|{text_col}|{mw}|{default_policy!r}|"
-        f"{sorted((policy_by_lang or {}).items())!r}|{lang_col}"
-    )
+    by_lang = repr(sorted((policy_by_lang or {}).items()))
+    stage_key = ("c4.stage", text_col, mw, repr(default_policy), by_lang, lang_col)
 
     def _build_stage() -> dict[str, Column]:
         text = F.col(text_col)
@@ -194,10 +192,8 @@ def c4_signals(
             kept = routed.otherwise(kept)
         return {"__c4_lines": lines, "__c4_kept": kept}
 
-    sig_key = (
-        f"c4.signals|{text_col}|{tuple(badwords)!r}|"
-        f"{sorted((badwords_by_lang or {}).items())!r}|{lang_col}"
-    )
+    bad_by_lang = repr(sorted((badwords_by_lang or {}).items()))
+    sig_key = ("c4.signals", text_col, tuple(badwords), bad_by_lang, lang_col)
 
     def _build_signals() -> dict[str, Column]:
         text = F.col(text_col)
@@ -237,11 +233,11 @@ def c4_signals(
             "c4_text": joined,
         }
 
-    stage_cols = memo_fragment(stage_key, _build_stage)
+    stage_cols = memo(stage_key, _build_stage)
     staged = df.select(
         "*", *[c.alias(name) for name, c in stage_cols.items()]
     )
-    sig_cols = memo_fragment(sig_key, _build_signals)
+    sig_cols = memo(sig_key, _build_signals)
     out = staged.select(
         "*", *[c.alias(name) for name, c in sig_cols.items()]
     )
@@ -255,8 +251,8 @@ def c4_pass_expr(min_num_sentences: int | None = None) -> Column:
         if min_num_sentences is None
         else min_num_sentences
     )
-    return memo_fragment(
-        f"c4.pass|{ms}",
+    return memo(
+        ("c4.pass", ms),
         lambda: (
             (F.col("c4_has_lorem_ipsum") == 0)
             & (F.col("c4_has_curly") == 0)

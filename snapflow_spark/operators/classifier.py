@@ -134,11 +134,11 @@ def featurize_docs(
     )
     # the bucketed-gram fragment is a pure function of the staged
     # "__toks" name + salt/buckets — memoized per context (round 18,
-    # functions/fragments.py: ~150 round trips per construction)
-    from snapflow_spark.functions.fragments import memo_fragment
+    # session.memo: ~150 round trips per construction)
+    from snapflow_spark.session import memo
 
-    bkts = memo_fragment(
-        f"classifier.bkts|__toks|{salt}|{num_buckets}",
+    bkts = memo(
+        ("classifier.bkts", "__toks", salt, num_buckets),
         lambda: F.coalesce(
             F.transform(
                 grams_expr(F.col("__toks")),

@@ -23,7 +23,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from snapflow_spark.catalog import ensure_parallelism
-from snapflow_spark.functions.fragments import memo_fragment
 from snapflow_spark.functions.text import (  # noqa: F401 — ngram_expr re-exported
     fingerprint_expr,
     ngram_expr,
@@ -35,13 +34,14 @@ from snapflow_spark.functions.text import (  # noqa: F401 — ngram_expr re-expo
 def _distinct_grams_frag(text_col: str, n: int):
     """array_distinct(ngram(tokens)) over a named text column — the
     shared candidate/verify gram fragment, memoized per context (round
-    18, functions/fragments.py: the zip_with n-gram fold costs ~60
+    18, session.memo: the zip_with n-gram fold costs ~60
     py4j round trips per construction and is rebuilt per bench rep)."""
-    return memo_fragment(
-        f"dedup.distinct_grams|{text_col}|{n}",
+    return memo(
+        ("dedup.distinct_grams", text_col, n),
         lambda: F.array_distinct(ngram_expr(tokens_expr(text_col), n)),
     )
 from snapflow_spark.operators.buckets import bucketed_pairs
+from snapflow_spark.session import memo, pin
 
 
 def exact_dedup(
@@ -147,8 +147,8 @@ def simhash_sha_candidates(
     interpreted, not codegen'd, and measured 31 s vs <2 s at sf0.1)."""
     from snapflow_spark.functions.text import simhash_sha_bands_udf
 
-    bands_call = memo_fragment(
-        f"dedup.simhash_sha_bands|{text_col}",
+    bands_call = memo(
+        ("dedup.simhash_sha_bands", text_col),
         lambda: simhash_sha_bands_udf(text_col),
     )
     banded = (
@@ -301,8 +301,8 @@ def minhash_sha_candidates(
     ngram_jaccard_pairs (the cascade in q_dedup_minhash)."""
     from snapflow_spark.functions.text import minhash_sha_bands_udf
 
-    bands_call = memo_fragment(
-        f"dedup.minhash_sha_bands|{text_col}",
+    bands_call = memo(
+        ("dedup.minhash_sha_bands", text_col),
         lambda: minhash_sha_bands_udf(text_col),
     )
     banded = (
@@ -343,8 +343,8 @@ def mingram_candidates(
     the multi-band generators (minhash_candidates) trade oracle
     reproducibility for higher recall.
     """
-    blk = memo_fragment(
-        "dedup.minblk|grams",
+    blk = memo(
+        ("dedup.minblk", "grams"),
         lambda: F.array_min(F.transform("grams", lambda g: F.sha2(g, 256))),
     )
     blocked = (
@@ -490,15 +490,13 @@ def ngram_jaccard_pairs(
     between the stages — same idea. ``wanted`` is one explode over the
     pair set, not a two-select union — one reference instead of two.
 
-    The persisted candidate frame is exposed as ``candidate_cache``
-    on the RETURNED DataFrame (the lsh_observation attribute
-    convention): a driver looping over many corpora should call
-    ``result.candidate_cache.unpersist()`` after materializing each
-    result, or the dead pair caches accumulate until storage-memory
-    eviction (which would also make the Observation counters inexact
-    again). Single-shot queries can ignore it — session teardown
-    releases the cache."""
-    candidate_pairs = candidate_pairs.persist()
+    Both pins (candidates, grams) are invocation entries of the
+    session-state registry (``session.pin``): they live until the
+    current scope is released — the next invocation of the declared
+    query, the end of a pipeline node run, or the end of a caller's
+    ``with session.scope():`` block — so materialize the result inside
+    that scope. Outside any scope they live as long as the session."""
+    candidate_pairs = pin(candidate_pairs)
     wanted = (
         candidate_pairs.select(
             F.explode(F.array(F.col("id_a"), F.col("id_b"))).alias(id_col)
@@ -512,7 +510,7 @@ def ngram_jaccard_pairs(
     # evaluated per row, the dominant CPU here; measured ~2x the
     # verify cost without the pin at sf0.1). Bounded like the
     # candidate pin: one row per doc that appears in a candidate pair.
-    grams = (
+    grams = pin(
         # probe=df: the semi-join preserves df's partitioning (wanted
         # broadcasts), so the widen decision comes from the stable
         # corpus frame — one partition probe per session instead of
@@ -524,7 +522,6 @@ def ngram_jaccard_pairs(
             _distinct_grams_frag(text_col, n).alias("grams"),
         )
         .withColumn("n_grams", F.size("grams"))
-        .persist()
     )
     ga = grams.select(
         F.col(id_col).alias("id_a"),
@@ -553,8 +550,6 @@ def ngram_jaccard_pairs(
             ),
         )
     )
-    out.candidate_cache = candidate_pairs  # release handle (docstring)
-    out.grams_cache = grams  # same caller-unpersist convention
     return out
 
 
@@ -713,15 +708,15 @@ def shared_span_pairs(
     # the id-sorted bucket truncation, and the final min(fp) all carry
     # over, and the one surviving value per pair is re-rendered
     # lower(hex(...)), bit-identical to sha2's hex output.
-    gram_h = memo_fragment(
-        f"dedup.gram_hashes_bin|{text_col}|{n}",
+    gram_h = memo(
+        ("dedup.gram_hashes_bin", text_col, n),
         lambda: F.transform(
             ngram_expr(tokens_expr(text_col), n),
             lambda s: F.unhex(F.sha2(s, 256)),
         ),
     )
-    winnow = memo_fragment(
-        f"dedup.winnow|__h|{w}",
+    winnow = memo(
+        ("dedup.winnow", "__h", w),
         lambda: winnow_fingerprints_expr(F.col("__h"), w=w),
     )
     staged = ensure_parallelism(df).select(
@@ -853,13 +848,13 @@ def excise_shared_spans(
     The contaminated-docs table is persisted (both output branches
     consume it, and Spark does not ReuseExchange across a union's
     branches — without the pin the corpus-scale gram shuffle runs
-    TWICE, verified round 7). Lifecycle (round 8): the pin is exposed
-    as ``victims_cache`` on the returned DataFrame — the same
-    caller-unpersist convention as ``ngram_jaccard_pairs``'s
-    ``candidate_cache``. A driver looping over corpora should call
-    ``result.victims_cache.unpersist()`` after materializing each
-    result; single-shot queries can ignore it (session teardown
-    releases it). Pass ``cache_victims=False`` when only ONE branch
+    TWICE, verified round 7). Lifecycle: the pin is an invocation
+    entry of the session-state registry (``session.pin``), released
+    with the current scope — the next invocation of the declared
+    query, the end of a pipeline node run, or the end of a caller's
+    ``with session.scope():`` block — so materialize the result inside
+    that scope; outside any scope it lives as long as the session.
+    Pass ``cache_victims=False`` when only ONE branch
     of the output will actually execute — e.g. a consumer that
     filters to ``n_excised_spans > 0``, which constant-folds the
     clean branch away — so the single-reference plan doesn't leave a
@@ -894,8 +889,8 @@ def excise_shared_spans(
         prio.alias("__prio"),
         tokens_expr(text_col).alias("__toks"),
     ).where(F.size("__toks") >= int(n))
-    hashed_grams = memo_fragment(
-        f"dedup.excise_grams|__toks|{n}|{hash_fn}",
+    hashed_grams = memo(
+        ("dedup.excise_grams", "__toks", n, hash_fn),
         lambda: F.transform(ngram_expr(F.col("__toks"), n), hasher),
     )
     grams = toks.select(
@@ -942,7 +937,7 @@ def excise_shared_spans(
         .agg(*victim_aggs)
     )
     if cache_victims:
-        victims = victims.persist()
+        victims = pin(victims)
 
     gram_n, min_span = int(n), int(min_span_tokens)
 
@@ -1026,6 +1021,4 @@ def excise_shared_spans(
             *touched_gram_cols,
         )
     )
-    out = clean.unionByName(touched)
-    out.victims_cache = victims  # caller-unpersist convention, see docstring
-    return out
+    return clean.unionByName(touched)

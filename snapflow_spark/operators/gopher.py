@@ -66,8 +66,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType, StructField, StructType
 
-from snapflow_spark.functions.fragments import memo_fragment
 from snapflow_spark.functions.text import tokens_expr
+from snapflow_spark.session import memo
 
 __all__ = [
     "GOPHER_DEFAULTS",
@@ -353,14 +353,12 @@ def gopher_signals(
     script-agnostic as published (``\\p{L}`` alpha classes, character
     fractions)."""
     # Per-context memo of the UNALIASED per-row battery (round 18,
-    # functions/fragments.py): ~460 py4j round trips per construction
+    # session.memo): ~460 py4j round trips per construction
     # (the stopword array_contains chain alone is 8 casts + a fold),
     # rebuilt identically per bench rep. Key carries every input that
     # shapes the expressions; aliasing happens fresh per use below.
-    frag_key = (
-        f"gopher.base|{text_col}|{stopwords!r}|"
-        f"{sorted((stopwords_by_lang or {}).items())!r}|{lang_col}"
-    )
+    by_lang = repr(sorted((stopwords_by_lang or {}).items()))
+    frag_key = ("gopher.base", text_col, repr(stopwords), by_lang, lang_col)
 
     def _build_base() -> dict[str, Column]:
         text = F.col(text_col)
@@ -411,8 +409,8 @@ def gopher_signals(
             "stop_hits": stop_hits,
         }
 
-    # memo_fragment stores Columns; a dict of them is equally immutable
-    base_cols: dict[str, Column] = memo_fragment(frag_key, _build_base)
+    # memo stores Columns; a dict of them is equally immutable
+    base_cols: dict[str, Column] = memo(frag_key, _build_base)
     base = df.select(
         "*", *[c.alias(name) for name, c in base_cols.items()]
     )
@@ -424,16 +422,16 @@ def gopher_signals(
     # the thirteen GetStructField reads are free. The UDF-call column
     # and the field reads are memoized like the battery above (the
     # pandas_udf wrapper re-serializes the function per call).
-    rep_call = memo_fragment(
-        f"gopher.rep|{text_col}",
+    rep_call = memo(
+        ("gopher.rep", text_col),
         lambda: _rep_signals_udf(F.col(text_col)),
     )
     with_rep = base.select("*", rep_call.alias("__rep"))
     out = with_rep.select(
         "*",
         *[
-            memo_fragment(
-                f"gopher.repfield|{f}", lambda f=f: F.col("__rep")[f]
+            memo(
+                ("gopher.repfield", f), lambda f=f: F.col("__rep")[f]
             ).alias(f)
             for f in _REP_FIELDS
         ],
@@ -457,8 +455,8 @@ def gopher_pass_expr(thresholds: dict[str, float] | None = None) -> Column:
             cond = cond & (c >= t[key] if op == ">=" else c <= t[key])
         return F.coalesce(cond, F.lit(False))
 
-    return memo_fragment(
-        f"gopher.pass|{sorted(t.items())!r}", _build
+    return memo(
+        ("gopher.pass", tuple(sorted(t.items()))), _build
     )
 
 

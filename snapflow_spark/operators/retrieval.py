@@ -38,10 +38,10 @@ WORD_RE = r"[\p{L}]+"
 
 def word_tokens_expr(col: str | Column) -> Column:
     if isinstance(col, str):
-        from snapflow_spark.functions.fragments import memo_fragment
+        from snapflow_spark.session import memo
 
-        return memo_fragment(
-            f"retrieval.word_tokens|{col}",
+        return memo(
+            ("retrieval.word_tokens", col),
             lambda: F.regexp_extract_all(
                 F.lower(F.col(col)), F.lit(WORD_RE), 0
             ),

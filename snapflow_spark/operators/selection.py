@@ -47,9 +47,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from snapflow_spark.functions.fragments import memo_fragment
 from snapflow_spark.operators.curation import _BUCKETS, _hash_bucket
 from snapflow_spark.operators.retrieval import word_tokens_expr
+from snapflow_spark.session import memo
 
 __all__ = [
     "dsir_log_weights",
@@ -89,8 +89,8 @@ def _grams_frag() -> Column:
     """grams_expr over the staged "__toks" column — a pure fragment of
     that name, memoized per context (round 18: the zip_with fold is
     ~30 py4j round trips per construction)."""
-    return memo_fragment(
-        "selection.grams|__toks", lambda: grams_expr(F.col("__toks"))
+    return memo(
+        ("selection.grams", "__toks"), lambda: grams_expr(F.col("__toks"))
     )
 
 
@@ -182,8 +182,8 @@ def _occ_with_model(
     intermediate). Variant (b) is the right shape if this scorer ever
     runs STANDALONE on a saturated cluster — revisit only with
     cluster-scale evidence."""
-    bucket = memo_fragment(
-        f"selection.bucket|__g|{salt}|{num_buckets}",
+    bucket = memo(
+        ("selection.bucket", "__g", salt, num_buckets),
         lambda: _hash_bucket(F.col("__g"), salt, num_buckets),
     )
     occ = tagged.select(

@@ -4,10 +4,7 @@ translation, format round-trips, and the incremental run loop.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
 from pathlib import Path
-from weakref import WeakKeyDictionary
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -17,6 +14,7 @@ from snapflow_spark.compat import ts_millis, ts_millis_sql
 from snapflow_spark.incremental import Node, Pipeline
 from snapflow_spark.operators import dedupe_keep_latest, merge_streams, schema_translate
 from snapflow_spark.registry import query
+from snapflow_spark.session import memo, temp_dir
 from snapflow_spark.sources import (
     read_csv,
     read_jsonl,
@@ -27,13 +25,6 @@ from snapflow_spark.sources import (
 )
 
 _SCRATCH = Path(__file__).resolve().parent.parent.parent / ".scratch"
-
-#: q_incremental_semantics' deferred-teardown warehouse, one per
-#: session (round 18): the previous invocation's tempdir is removed on
-#: the next invocation, so the returned lazy store read stays valid
-#: until the caller has materialized it (every harness materializes
-#: each query before constructing the next).
-_INCR_WAREHOUSES: "WeakKeyDictionary" = WeakKeyDictionary()
 
 _EVENT_COLS = ["event_id", "user_id", "event_type", "value"]
 
@@ -354,19 +345,11 @@ def q_scan_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixtures and the lazy union instead of re-writing 20 fixture
     tables; the first call in any process still exercises every
     writer end-to-end.  See _build_scan_formats for the branches."""
-    per = _SCAN_FORMATS_CACHE.get(spark)
-    if per is None:
-        per = {}
-        _SCAN_FORMATS_CACHE[spark] = per
-    df = per.get(sf_dir)
-    if df is None:
-        per[sf_dir] = df = _build_scan_formats(spark, sf_dir)
-    return df
-
-
-_SCAN_FORMATS_CACHE: "WeakKeyDictionary[SparkSession, dict]" = (
-    WeakKeyDictionary()
-)
+    return memo(
+        ("framework.scan_formats", sf_dir),
+        lambda: _build_scan_formats(spark, sf_dir),
+        owner=spark,
+    )
 
 
 def _build_scan_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1127,21 +1110,18 @@ def q_incremental_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     Round 18: the result is returned as a LAZY read of the
     latest_state store itself instead of a copy-out write to stable
     scratch — one fewer Spark re-encode job (and its read-back) per
-    invocation. That requires the warehouse to outlive this call, so
-    teardown is DEFERRED: each invocation removes the PREVIOUS
-    invocation's warehouse (whose returned DataFrame the caller has
-    materialized by then — the bench/oracle/driver contract), and at
-    most one ~events-sized tempdir lives until the next call or
-    process end. The pipeline ticks themselves (3 delta appends, 3
-    identity-append hard-links, 3 state recomputes) are the declared
+    invocation. That requires the warehouse to outlive this call: it
+    is an invocation entry of the session-state registry
+    (session.temp_dir), removed when this query is next invoked
+    through the registry in the same session, or at process exit. Lifetime contract: MATERIALIZE
+    THE RESULT BEFORE RE-INVOKING — a result read after the next
+    invocation raises (its files are gone). The pipeline ticks
+    themselves (3 delta appends, 3 identity-append hard-links, 3 state
+    recomputes) are the declared
     semantics and still run end-to-end per invocation.
     """
     _SCRATCH.mkdir(parents=True, exist_ok=True)
-    prev = _INCR_WAREHOUSES.pop(spark, None)
-    if prev is not None:
-        shutil.rmtree(prev, ignore_errors=True)
-    warehouse = tempfile.mkdtemp(prefix="incr_", dir=_SCRATCH)
-    _INCR_WAREHOUSES[spark] = warehouse
+    warehouse = temp_dir("incr_", _SCRATCH)
     pipe = Pipeline(warehouse)
     src = pipe.add_source("events_src")
     pipe.add_node(

@@ -9,15 +9,12 @@ tests/test_northstar.py (SURVEY §5.2(3)).
 
 from __future__ import annotations
 
-import weakref
-
 import pandas as pd  # module-level: pandas_udf string hints need it
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import ArrayType, IntegerType
 from pyspark.sql import functions as F
 
 from snapflow_spark.catalog import ensure_parallelism, load_table
-from snapflow_spark.functions.fragments import memo_fragment
 from snapflow_spark.functions.text import (
     BPE_RE,
     bpe_tokens_expr,
@@ -56,6 +53,7 @@ from snapflow_spark.operators.similarity import (
     embedding_near_dup_pairs_int,
 )
 from snapflow_spark.registry import query
+from snapflow_spark.session import file_stamp, memo
 
 
 def _psl_select_items() -> str:
@@ -251,11 +249,11 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the synthetic-URL tower and the PSL+normalize fingerprint are
     # pure fragments of fixed column names — memoized per context
-    # (round 18, functions/fragments.py; the PSL longest-match tower
+    # (round 18, session.memo; the PSL longest-match tower
     # alone is several hundred py4j round trips per construction)
-    synth_url = memo_fragment("northstar.synth_url|doc_id", _build_synth_url)
-    url_fp = memo_fragment(
-        "northstar.url_fp|url",
+    synth_url = memo(("northstar.synth_url", "doc_id"), _build_synth_url)
+    url_fp = memo(
+        ("northstar.url_fp", "url"),
         lambda: F.concat(
             registered_domain_expr(host_expr("url")),
             F.lit("|"),
@@ -1215,12 +1213,12 @@ def q_fingerprint_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = ensure_parallelism(load_table(spark, sf_dir, "documents"))
-    gram_h = memo_fragment(
-        "northstar.winnow_gram_hashes|text|3",
+    gram_h = memo(
+        ("northstar.winnow_gram_hashes", "text", 3),
         lambda: gram_hashes_expr(tokens_expr("text"), n=3),
     )
-    winnow_fps = memo_fragment(
-        "northstar.winnow_fps|h|4",
+    winnow_fps = memo(
+        ("northstar.winnow_fps", "h", 4),
         lambda: winnow_fingerprints_expr(F.col("h"), w=4),
     )
     staged = d.select("doc_id", gram_h.alias("h")).select(
@@ -1415,38 +1413,31 @@ def _ann_staged_index(spark: SparkSession, sf_dir: str) -> IVFPQIndex:
     session/process — the cold pass still pays the KMeans sample
     collect, both trainings, and the encode pass end-to-end; warm
     repeats stop re-training an identical index per call (driver-side
-    KMeans was the roster's most scalar-bound per-rep cost). A
-    regenerated fixture (new mtime) or a different sf_dir re-stages
-    and releases the stale pin; the WeakKeyDictionary dies with the
-    session."""
-    import os
-
+    KMeans was the roster's most scalar-bound per-rep cost). The index
+    is ONE session-state entry per session, stamped (sf_dir, mtime): a
+    regenerated fixture or a different sf_dir re-stages and releases
+    the stale pin; two sessions never touch each other's entry."""
     from snapflow_spark.catalog import table_path
 
-    per = _ANN_INDEX_CACHE.setdefault(spark, {})
-    try:
-        mt = os.path.getmtime(table_path(sf_dir, "embeddings"))
-    except OSError:
-        mt = -1.0
-    key = (sf_dir, mt)
-    idx = per.get(key)
-    if idx is None:
-        for old in per.values():  # release stale stagings (other sf /
-            old.coded.unpersist()  # regenerated fixture)
-        per.clear()
+    def _stage() -> IVFPQIndex:
         emb = load_table(spark, sf_dir, "embeddings")
         idx = IVFPQIndex.build(emb, k_cells=16, m=4, n_codes=32)
         idx.coded = idx.coded.persist()
-        per[key] = idx
-    else:
-        from pyspark import StorageLevel
+        return idx
 
-        # re-assert the intra-query pin if a catalog clearCache dropped
-        # it (bench reps do): both search tiers + the re-rank consume
-        # the coded table within ONE execution — the same bounded
-        # intra-query persist the per-call form always took
-        if idx.coded.storageLevel == StorageLevel.NONE:
-            idx.coded = idx.coded.persist()
+    idx = memo(
+        ("northstar.ann_index",),
+        _stage,
+        owner=spark,
+        stamp=(sf_dir, file_stamp(table_path(sf_dir, "embeddings"))),
+        release=lambda idx: idx.coded.unpersist(),
+    )
+    # re-assert the intra-query pin if a catalog clearCache dropped it
+    # (bench reps do): both search tiers + the re-rank consume the
+    # coded table within ONE execution — the same bounded intra-query
+    # persist the per-call form always took
+    if not idx.coded.storageLevel.useMemory:
+        idx.coded = idx.coded.persist()
     return idx
 
 
@@ -1491,16 +1482,6 @@ def q_similarity_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _PLANT = 60  # planted near-dup copies; detected pairs ≈ this count
 _PLANT_OFFSET = 1_000_000
-
-# q_similarity_ann's staged-index cache, keyed by SparkSession via
-# weak references (round 6; widened to the whole trained index per
-# (sf_dir, mtime) in round 18): two sessions in one process never
-# unpersist each other's coded table, a re-staging (new sf_dir or
-# regenerated fixture) releases the previous pin, and a session's
-# final pinned table is dropped with the session object instead of
-# leaking until process end.
-_ANN_INDEX_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
 
 @query(
     "q_embed_near_dup",
@@ -2237,8 +2218,8 @@ def q_embed_near_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # redistributes anyway. Norms are hoisted out of the pair loop
     # (_vec_member). Interleaved A/B: 1.69 s -> 0.93 s warm at sf0.1,
     # results value-identical.
-    cell_bands = memo_fragment(
-        "northstar.cell_bands|embedding",
+    cell_bands = memo(
+        ("northstar.cell_bands", "embedding"),
         lambda: _cell_bands_udf("embedding"),
     )
     banded = emb.select("vec_id", "embedding").select(

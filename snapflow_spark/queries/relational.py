@@ -9,8 +9,6 @@ with AQE handling skew.
 
 from __future__ import annotations
 
-from weakref import WeakKeyDictionary
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -27,6 +25,7 @@ from snapflow_spark.compat import (
 )
 from snapflow_spark.operators import asof_join
 from snapflow_spark.registry import query
+from snapflow_spark.session import file_stamp, memo
 from snapflow_spark.sources import refresh_bucketed
 
 
@@ -106,35 +105,20 @@ def q_join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BUCKETED_FACTS_CACHE: "WeakKeyDictionary[SparkSession, dict]" = (
-    WeakKeyDictionary()
-)
-
-
 def _bucketed_facts(spark: SparkSession, sf_dir: str):
     """q_join_inner's bucketed fact pair, staged once per
-    (session, sf_dir). Table names carry an sf_dir digest so two
+    (session, sf_dir) and restaged when either input's mtime changes.
+    Table names carry an sf_dir digest so two
     scale factors in one session stage DISTINCT catalog tables —
     a shared name would let the first sf's cached scan silently read
     the second sf's rewrite. The staged tables are a LAYOUT of the
     parquet inputs (filter + bucketed write), rebuilt from scratch in
     every new session/process; reads always scan the staged files."""
     import hashlib
-    import os
 
     from snapflow_spark.catalog import table_path
 
-    per = _BUCKETED_FACTS_CACHE.setdefault(spark, {})
-    # key carries the input mtimes so a regenerated fixture restages
-    def _mt(name: str) -> float:
-        try:
-            return os.path.getmtime(table_path(sf_dir, name))
-        except OSError:
-            return -1.0
-
-    key = (sf_dir, _mt("orders"), _mt("lineitem"))
-    pair = per.get(key)
-    if pair is None:
+    def _stage():
         tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
         o = (
             load_table(spark, sf_dir, "orders")
@@ -151,8 +135,14 @@ def _bucketed_facts(spark: SparkSession, sf_dir: str):
         )
         ob = refresh_bucketed(o, f"q_join_inner_orders_b_{tag}", ["o_orderkey"], 8)
         lb = refresh_bucketed(l, f"q_join_inner_lineitem_b_{tag}", ["l_orderkey"], 8)
-        per[key] = pair = (ob, lb)
-    return pair
+        return ob, lb
+
+    return memo(
+        ("relational.bucketed_facts", sf_dir),
+        _stage,
+        owner=spark,
+        stamp=tuple(file_stamp(table_path(sf_dir, t)) for t in ("orders", "lineitem")),
+    )
 
 
 @query(

@@ -28,11 +28,12 @@ QUERIES: dict[str, QuerySpec] = {}
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     def deco(fn: QueryFn) -> QueryFn:
-        from snapflow_spark.session import tune
+        from snapflow_spark.session import scope, tune
 
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             tune(spark)
-            return fn(spark, sf_dir)
+            with scope(spark, name):
+                return fn(spark, sf_dir)
 
         wrapped.__name__ = fn.__name__
         wrapped.__doc__ = fn.__doc__

@@ -5,13 +5,44 @@ is replaced by a SparkSession plus the runtime confs below. ``tune`` is
 idempotent and safe to call on a session we did not create (the driver
 passes its own session to ``__spark_entry__.entry``): it only touches
 runtime-settable confs.
+
+It also holds the engine's one session-state registry (``memo``,
+``pin``, ``pin_checkpoint``, ``temp_dir``, ``scope``): every plan memo,
+staged layout, persisted frame and temp warehouse the engine keeps
+across calls is an entry here, under a weakly held owner (a
+SparkSession or a SparkContext), with one of two lifetimes:
+
+- **session**: ``memo`` entries, keyed by a tuple, live until the
+  owner dies or the process exits. An entry with a freshness
+  ``stamp`` (input mtimes) is released and rebuilt when it changes.
+- **invocation**: ``pin``, ``pin_checkpoint`` and ``temp_dir``
+  entries belong to the innermost open scope. A declared query
+  (``registry.query``) opens one per call and keeps it until the same
+  query is next invoked in that session, so its lazy result stays
+  valid until then — materialize before re-invoking.
+  ``Pipeline.run_node`` releases its scope once the node's output is
+  written; any other caller opens ``with scope():``. Outside every
+  scope a pin is a plain persist the caller owns, and a temp dir
+  lives until process exit.
+
+At process exit the temp dirs still registered are removed; that path
+only touches the file system, never the JVM (it may be gone by then).
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
+import weakref
+from contextlib import contextmanager, suppress
+from contextvars import ContextVar
+from typing import Any, Callable, TypeVar
 
-from pyspark.sql import SparkSession
+from py4j.protocol import Py4JError
+from pyspark import SparkContext
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
@@ -205,3 +236,166 @@ def build_session(app_name: str = "snapflow-spark", master: str | None = None) -
         .config("spark.sql.session.timeZone", "UTC")
     )
     return tune(builder.getOrCreate())
+
+
+# --------------------------------------------------------------------
+# Session-state registry (see the module docstring)
+# --------------------------------------------------------------------
+
+#: entries per owner: past it ``memo`` builds fresh instead of storing
+#: (the pre-memo behavior, not an error) — memos are meant for module-
+#: constant key families, not for dynamically generated keys
+MAX_ENTRIES = 4096
+
+T = TypeVar("T")
+
+_OWNERS: "weakref.WeakKeyDictionary[Any, dict]" = weakref.WeakKeyDictionary()
+# the entry list of the open scope; a ContextVar, not a global,
+# because foreachBatch callbacks run on other threads
+_SCOPE: "ContextVar[list | None]" = ContextVar("snapflow_scope", default=None)
+# temp dirs still registered, removed at process exit
+_LIVE_DIRS: set[str] = set()
+
+
+class _Entry:
+    """One registered resource: its value, freshness stamp and release."""
+
+    __slots__ = ("value", "stamp", "release")
+
+    def __init__(self, value, stamp=None, release=None):
+        self.value, self.stamp, self.release = value, stamp, release
+
+    def close(self) -> None:
+        release, self.release = self.release, None
+        with suppress(Py4JError):  # best-effort: a stopped JVM cannot unpersist
+            if release is not None:
+                release(self.value)
+
+
+def _close_all(entries) -> None:
+    for e in reversed(list(entries)):
+        e.close()
+
+
+def memo(
+    key: tuple, build: Callable[[], T], *, owner=None, stamp=None, release=None
+) -> T:
+    """``build()`` memoized per (owner, key) for the owner's lifetime.
+
+    ``owner`` defaults to the active SparkContext (expression
+    fragments, literal Seqs); with none active, an owner that cannot
+    be weakly referenced, or an unhashable key, it builds fresh.
+    ``key`` is a tuple that must capture EVERY input that shapes the
+    value (column names, thresholds, salts), led by a dotted family
+    name. ``stamp`` is a freshness token: a stored entry with a
+    different stamp is released and rebuilt. ``release(value)`` runs
+    when the entry is replaced or its owner dies.
+
+    Expression fragments (round 18): the big Column towers cost
+    hundreds of py4j round trips per construction, and harnesses
+    construct every query once per rep. Catalyst expressions are
+    immutable, so a memoized UNALIASED fragment is as reusable as
+    ``F.col("x") * 2``: alias it fresh at each use site (an alias's
+    exprId must be unique per plan) and never mutate it. Helpers that
+    take ``str | Column`` memoize only the string form (a Column may
+    close over caller state). Entries are plans, never data: every
+    action still evaluates from the inputs.
+
+    Not synchronized: two threads that miss the same key both build,
+    and the later store wins — harmless for plan memos; build entries
+    that carry a ``release`` on the query thread."""
+    if owner is None:
+        owner = SparkContext._active_spark_context
+        if owner is None:
+            return build()
+    try:
+        per = _OWNERS.get(owner)
+        if per is None:
+            per = _OWNERS[owner] = {}
+            weakref.finalize(owner, _close_all, per.values()).atexit = False
+        e = per.get(key)
+    except TypeError:
+        return build()
+    if e is not None:
+        if e.stamp == stamp:
+            return e.value
+        del per[key]
+        e.close()
+    value = build()
+    if len(per) < MAX_ENTRIES:
+        per[key] = _Entry(value, stamp, release)
+    return value
+
+
+def file_stamp(path: str) -> float:
+    """A file's mtime as a freshness stamp (-1.0 when it is missing)."""
+    try:
+        return os.path.getmtime(path)
+    except OSError:
+        return -1.0
+
+
+def _hold(value: T, release: Callable[[T], Any]) -> T:
+    entries = _SCOPE.get()
+    if entries is not None:
+        entries.append(_Entry(value, release=release))
+    return value
+
+
+def pin(df: DataFrame) -> DataFrame:
+    """``df.persist()`` as an invocation entry: unpersisted when the
+    current scope is released."""
+    return _hold(df.persist(), lambda d: d.unpersist())
+
+
+def pin_checkpoint(df: DataFrame) -> DataFrame:
+    """``df.localCheckpoint(eager=False)`` as an invocation entry: the
+    checkpoint RDD (persisted like a pin) is unpersisted when the
+    current scope is released."""
+    return _hold(
+        df.localCheckpoint(eager=False),
+        lambda d: d._jdf.queryExecution().logical().rdd().unpersist(False),
+    )
+
+
+def temp_dir(prefix: str, parent: str | os.PathLike) -> str:
+    """A fresh temp dir under ``parent`` as an invocation entry:
+    removed when the current scope is released, or at process exit."""
+    path = tempfile.mkdtemp(prefix=prefix, dir=parent)
+    _LIVE_DIRS.add(path)
+    return _hold(path, _remove_dir)
+
+
+def _remove_dir(path: str) -> None:
+    _LIVE_DIRS.discard(path)
+    shutil.rmtree(path, ignore_errors=True)
+
+
+# the exit path touches only the file system, never the JVM (it may
+# be gone by then)
+atexit.register(lambda: [_remove_dir(p) for p in list(_LIVE_DIRS)])
+
+
+@contextmanager
+def scope(owner=None, query: str | None = None):
+    """Open an invocation scope.
+
+    ``with scope():`` releases its entries on exit. ``scope(owner,
+    query)`` is the scope of one call of a declared query (opened by
+    ``registry.query``): it releases the previous call's entries in
+    ``owner`` (a fresh stamp per call) and keeps this call's entries
+    live until the next call. Inside an already open scope a query
+    call opens none: the outer scope holds its entries."""
+    if query is not None and _SCOPE.get() is not None:
+        yield None
+        return
+    entries = [] if query is None else memo(
+        ("invocation", query), list, owner=owner, stamp=object(), release=_close_all
+    )
+    token = _SCOPE.set(entries)
+    try:
+        yield entries
+    finally:
+        _SCOPE.reset(token)
+        if query is None:
+            _close_all(entries)

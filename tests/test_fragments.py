@@ -1,18 +1,24 @@
-"""Parity pins for the per-context expression-fragment memo
-(functions/fragments.py, round 18 — VERDICT r17 item 1).
+"""Parity pins for expression-fragment memos in the session-state
+registry (``session.memo`` with the active SparkContext as owner).
 
 The memo must be invisible to query semantics: a query constructed
 twice in one session (second construction served from the memo) must
-analyze to the same logical plan, and the memo must never outlive or
-cross SparkContexts.
+analyze to the same logical plan, the memo must never outlive or
+cross SparkContexts, and distinct tuple keys must never collide.
 """
 
 from __future__ import annotations
 
+from pyspark import SparkContext
 from pyspark.sql import functions as F
 
-from snapflow_spark.functions import fragments
-from snapflow_spark.functions.fragments import memo_fragment
+from snapflow_spark import session
+from snapflow_spark.session import memo
+
+
+def lookup(owner, key: tuple):
+    """The registry's live entry for (owner, key), or None."""
+    return session._OWNERS.get(owner, {}).get(key)
 
 
 def _same_result(df1, df2) -> bool:
@@ -29,29 +35,58 @@ def test_memo_hits_and_returns_identical_object(spark):
         calls["n"] += 1
         return F.length(F.col("x"))
 
-    a = memo_fragment("test.frag|x", build)
-    b = memo_fragment("test.frag|x", build)
+    a = memo(("test.frag", "x"), build)
+    b = memo(("test.frag", "x"), build)
     assert a is b
     assert calls["n"] == 1
     # a different key builds fresh
-    c = memo_fragment("test.frag|y", lambda: F.length(F.col("y")))
+    c = memo(("test.frag", "y"), lambda: F.length(F.col("y")))
     assert c is not a
 
 
-def test_memo_is_keyed_by_context_and_bounded(spark):
+def test_memo_is_keyed_by_context_and_bounded(spark, monkeypatch):
     sc = spark.sparkContext
-    per = fragments._CACHE.get(sc)
-    assert per is not None and "test.frag|x" not in per or True
-    # cap: past _MAX_KEYS the memo degrades to build-fresh, never grows
-    old_max = fragments._MAX_KEYS
-    try:
-        fragments._MAX_KEYS = len(fragments._CACHE[sc])
-        before = len(fragments._CACHE[sc])
-        out = memo_fragment("test.overflow", lambda: F.lit(1))
-        assert out is not None
-        assert len(fragments._CACHE[sc]) == before  # not stored
-    finally:
-        fragments._MAX_KEYS = old_max
+    key = ("test.frag", "ctx")
+    frag = memo(key, lambda: F.length(F.col("ctx")))
+    # stored under the active SparkContext, not under the session
+    entry = lookup(sc, key)
+    assert entry is not None and entry.value is frag
+    assert lookup(spark, key) is None
+    # with no active context nothing is stored: every call builds fresh
+    monkeypatch.setattr(SparkContext, "_active_spark_context", None)
+    n1 = memo(("test.frag", "no_ctx"), object)
+    n2 = memo(("test.frag", "no_ctx"), object)
+    assert n1 is not n2
+    monkeypatch.undo()
+    assert lookup(sc, ("test.frag", "no_ctx")) is None
+    # cap: past MAX_ENTRIES the memo degrades to build-fresh, never grows
+    size = len(session._OWNERS[sc])
+    monkeypatch.setattr(session, "MAX_ENTRIES", size)
+    o1 = memo(("test.overflow",), lambda: F.lit(1))
+    o2 = memo(("test.overflow",), lambda: F.lit(1))
+    assert o1 is not o2
+    assert lookup(sc, ("test.overflow",)) is None
+    assert len(session._OWNERS[sc]) == size
+
+
+def test_memo_tuple_keys_do_not_collide(spark):
+    """Keys that were equal as ``|``-joined strings ("test.sep|a|b|c")
+    — a column name containing ``|`` — are distinct tuple keys, so
+    each gets its own entry and its own fragment."""
+    sc = spark.sparkContext
+    k1 = ("test.sep", "a|b", "c")
+    k2 = ("test.sep", "a", "b|c")
+    assert "|".join(k1) == "|".join(k2)
+    f1 = memo(k1, lambda: F.concat(F.col("`a|b`"), F.col("c")))
+    f2 = memo(k2, lambda: F.concat(F.col("a"), F.col("`b|c`")))
+    assert f1 is not f2
+    assert lookup(sc, k1).value is f1
+    assert lookup(sc, k2).value is f2
+    df = spark.createDataFrame(
+        [("x", "y", "z", "w")], "`a|b` string, c string, a string, `b|c` string"
+    )
+    row = df.select(f1.alias("one"), f2.alias("two")).first()
+    assert (row.one, row.two) == ("xy", "zw")
 
 
 def test_reconstructed_query_plans_are_equivalent(spark, tmp_path):

@@ -14,6 +14,7 @@ from snapflow_spark.operators.linkgraph import (
     link_graph_edges,
     pagerank,
 )
+from snapflow_spark.session import scope
 
 
 def _reference_pagerank(edges, damping, iterations):
@@ -70,6 +71,17 @@ def test_pagerank_unweighted_and_ordering(spark):
 def test_pagerank_empty(spark):
     df = spark.createDataFrame([], "src string, dst string, weight long")
     assert pagerank(df).count() == 0
+
+
+@pytest.mark.parametrize("id_type", ["string", "bigint"])
+def test_pagerank_empty_graph_schema(spark, id_type):
+    """An empty edge set returns zero rows with ``id`` typed from the
+    edge columns (not a fixed string) and a double ``rank``."""
+    df = spark.createDataFrame([], f"src {id_type}, dst {id_type}, weight long")
+    with scope():
+        out = pagerank(df, iterations=2)
+        assert out.collect() == []
+    assert out.dtypes == [("id", id_type), ("rank", "double")]
 
 
 def test_link_graph_edges(spark):

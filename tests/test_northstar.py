@@ -1346,67 +1346,6 @@ def test_jpeg_multi_scan_decode():
         encode_jpeg(img, subsampling="420", interleave=False)
 
 
-def test_ann_staged_index_lifecycle(spark):
-    """The q_similarity_ann index is STAGED per (session, sf_dir,
-    mtime) — round 18: a repeat call with the same inputs reuses the
-    SAME trained index (no re-training, no new pin); a different
-    sf_dir re-stages and releases the stale pin exactly once; a second
-    session in the same process gets its own slot and is untouched by
-    the first session's re-staging."""
-    from snapflow_spark.queries import northstar as ns
-
-    sf = "/root/testdata/sf0.001"
-    q = ns.q_similarity_ann
-    spark.catalog.clearCache()
-    ns._ANN_INDEX_CACHE.pop(spark, None)
-
-    # Asserts on the cache dict + per-DataFrame storage levels, NOT on
-    # getRDDStorageInfo() growth: clearCache/unpersist are
-    # NON-BLOCKING, so global RDD-block counts drift while earlier
-    # tests' dead pins drain — the round-7 full-suite flake was
-    # exactly that baseline race (VERDICT r7 #1).
-    q(spark, sf).write.format("noop").mode("overwrite").save()
-    (first_key, first) = next(iter(ns._ANN_INDEX_CACHE[spark].items()))
-    assert first_key[0] == sf
-    assert first.coded.storageLevel.useMemory  # pinned
-
-    # repeat call, same inputs: the staged index is REUSED — same
-    # object, no release, still exactly one entry
-    released = []
-    orig_unpersist = first.coded.unpersist
-    first.coded.unpersist = lambda *a, **k: (
-        released.append(True),
-        orig_unpersist(*a, **k),
-    )[1]
-    q(spark, sf).write.format("noop").mode("overwrite").save()
-    assert ns._ANN_INDEX_CACHE[spark][first_key] is first
-    assert len(ns._ANN_INDEX_CACHE[spark]) == 1
-    assert released == []
-
-    # a second session stages its own slot; ours is untouched
-    other = spark.newSession()
-    q(other, "/root/testdata/sf0.01").write.format("noop").mode(
-        "overwrite"
-    ).save()
-    assert next(iter(ns._ANN_INDEX_CACHE[other].values())) is not first
-    assert first.coded.storageLevel.useMemory
-
-    # a DIFFERENT sf_dir in our session re-stages: the stale pin is
-    # released exactly once, the other session's stays pinned
-    q(spark, "/root/testdata/sf0.01").write.format("noop").mode(
-        "overwrite"
-    ).save()
-    assert released == [True]
-    assert len(ns._ANN_INDEX_CACHE[spark]) == 1
-    assert next(iter(ns._ANN_INDEX_CACHE[spark].keys()))[0].endswith("sf0.01")
-    other_idx = next(iter(ns._ANN_INDEX_CACHE[other].values()))
-    assert other_idx.coded.storageLevel.useMemory
-    # cleanup: drop both sessions' pins
-    for s in (spark, other):
-        for idx in ns._ANN_INDEX_CACHE.pop(s).values():
-            idx.coded.unpersist()
-
-
 def test_ivfpq_index_save_load_and_stored_code_scan(embeddings, tmp_path):
     """The STANDING IVF-PQ index: save/load round-trips the coded
     table + centroids + codebooks; a search on the loaded index ADC-

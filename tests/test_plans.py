@@ -966,34 +966,6 @@ def test_yaml_builtin_tokenize(spark, tmp_path):
         _tokenize(spark, df, artifact=bpe_path, sample_alpha=0.5)
 
 
-def test_pipeline_releases_advertised_cache_handles(spark, tmp_path):
-    """run_node auto-unpersists victims_cache/candidate_cache after
-    materializing a node's output (VERDICT r7 #1 lifecycle): a node
-    function that returns a DataFrame advertising a pinned table must
-    leave it UNPINNED once produce() has written the snapshot."""
-    from snapflow_spark.plans import graph
-
-    pinned = spark.createDataFrame([(1, "x")], "id long, v string").persist()
-    pinned.count()
-    assert pinned.storageLevel.useMemory
-
-    def node_fn(spark, input):  # noqa: A002
-        out = input.withColumn("w", F.lit(1))
-        out.victims_cache = pinned
-        return out
-
-    g = graph(str(tmp_path / "wh_release"))
-    g.source("src")
-    g.create_node("n", node_fn, upstream="src")
-    g.pipeline.sources["src"].append(
-        spark.createDataFrame([(7, "a")], "id long, v string")
-    )
-    assert g.produce(spark) == 1
-    # the write materialized the output; the advertised pin is gone
-    assert not pinned.storageLevel.useMemory
-    assert g.read(spark, "n").count() == 1
-
-
 def test_yaml_builtin_expect(spark, tmp_path):
     """core.expect: commonmodel-validator semantics as a YAML node —
     quarantine keeps only conforming rows, flag annotates every row,

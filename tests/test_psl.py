@@ -212,14 +212,11 @@ def test_icann_only_section_filtering(tmp_path):
 
 def test_isin_literals_one_command_ship_and_cache(spark):
     """Round 17: isin_literals ships a string literal list as ONE py4j
-    payload (JVM-side split) and memoizes the converted Seq per
-    (SparkContext, value tuple). Results must match the public
-    Column.isin path exactly — including NULL and miss semantics — the
-    cache must hand back the same JVM Seq on a repeat call, and
+    payload (JVM-side split). Results must match the public
+    Column.isin path exactly — including NULL and miss semantics — and
     values the fast path cannot carry (empty string, the separator
-    byte) must fall back to the per-element converter unchanged."""
-    from pyspark import SparkContext
-
+    byte) must fall back to the per-element converter unchanged. (The
+    memoized Seq entry is pinned in test_session_state.py.)"""
     from snapflow_spark.functions import psl as psl_mod
 
     vals = sorted(
@@ -235,15 +232,6 @@ def test_isin_literals_one_command_ship_and_cache(spark):
     ).collect()
     for r in got:
         assert r.x == r.ref
-    ctx = SparkContext._active_spark_context
-    cache = psl_mod._SEQ_CACHE[ctx]
-    # keys carry value TYPES (r18: python cross-type equality would let
-    # [1] hit the cached Seq of [True] under a plain value tuple)
-    key = tuple((type(v).__name__, v) for v in vals)
-    assert key in cache
-    seq_a = cache[key]
-    psl_mod.isin_literals(F.col("h"), list(vals))  # fresh list, same values
-    assert cache[key] is seq_a
     odd = ["", "with\x1fsep", "plain.example"]
     got2 = df.select(
         psl_mod.isin_literals(F.col("h"), odd).alias("x"),
