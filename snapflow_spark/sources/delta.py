@@ -82,6 +82,7 @@ import time
 import uuid
 from dataclasses import dataclass, field
 from dataclasses import replace as dc_replace
+from functools import reduce
 from pathlib import Path
 from urllib.parse import quote, unquote
 
@@ -1211,7 +1212,7 @@ def _distributed_file_stats(
 def _stage_and_move(
     df: DataFrame, table: Path, partition_by: list[str],
     subdir: str = "",
-) -> list[tuple[str, dict, int]]:
+) -> list[tuple[str, dict, int, int, dict | None]]:
     """Write data files via Spark's parquet writer into a staging dir
     (hive ``col=val/`` layout for partitioned tables — Delta's own
     file convention), then move each part file under the table root
@@ -2520,14 +2521,23 @@ def merge_delta(
     Scale shape: the source keys' min/max bounds PRUNE the target
     file list from log stats before any scan (delta-spark's MERGE
     touched-file discovery) — a narrow changelog against a 100 TB
-    table scans only the files whose key ranges can match; the
-    matched-row marking rides ``_dv_delete_plan``'s distributed
-    key-equality matcher (source keys join the scan, AQE broadcasts
-    small changelogs; DV sidecars are written executor-side), the
-    new rows stage through the distributed hive-layout writer, and
-    the driver holds only O(#touched files) descriptors +
-    O(#staged files) stats — a billion-row changelog never
-    materializes rows driver-side.
+    table scans only the files whose key ranges can match.  ONE
+    census job then left-joins the source to the target's key set
+    and counts per key: the unmatched rows are ``rows_inserted``,
+    and a matched key carried by several source rows raises before
+    anything is written.  The matched-row marking rides
+    ``_dv_delete_plan``'s distributed key-equality matcher (source
+    keys join the scan, AQE broadcasts small changelogs; DV sidecars
+    are written executor-side).  The new rows of every clause stage
+    in ONE write — for update + insert that is the projected source
+    itself, with no target read.  The write is rebalanced first
+    (on the partition columns of a partitioned table): the source
+    is cached, and a cached plan keeps its shuffle partitioning
+    (AQE does not coalesce it), so without the rebalance a changelog
+    that went through a 200-partition shuffle would stage ~200 tiny
+    files; with it AQE sizes the files by bytes.  The driver holds
+    only O(#touched files) descriptors + O(#staged files) stats — a
+    billion-row changelog never materializes rows driver-side.
     CDF-enabled tables emit authoritative change rows
     (update_preimage/postimage pairs, insert, delete).  Returns
     ``{"rows_matched": n, "rows_inserted": m}``.
@@ -2635,42 +2645,11 @@ def merge_delta(
             mmf = None
         target = read_delta(spark, table, min_max_filter=mmf)
         tgt_keys = target.select(*on).dropDuplicates()
-        matched_src = source.join(tgt_keys, on, "left_semi")
-        if when_matched is not None:
-            # delta's multiple-source-rows-matched rule: ambiguous
-            # update/delete refuses loudly (one tiny agg, limit 1)
-            dup = (
-                matched_src.groupBy(*on)
-                .count()
-                .where(F.col("count") > 1)
-                .limit(1)
-                .collect()
-            )
-            if dup:
-                key = {c: dup[0][c] for c in on}
-                raise ValueError(
-                    "merge_delta: multiple source rows match one "
-                    f"target row (e.g. key {key}) — deduplicate the "
-                    "changelog first (dedupe_keep_latest)"
-                )
-        actions: list[dict] = []
-        n_matched = 0
-        n_by_source = 0
-        del_matched = when_matched is not None
-        del_unmatched = when_not_matched_by_source == "delete"
-        if del_matched or del_unmatched:
-            actions, n_total, n_matched = _dv_delete_plan(
-                spark, table, snap, None, None, mmf,
-                what="merge_delta",
-                match_keys=source.select(*on),
-                delete_matched=del_matched,
-                delete_not_matched=del_unmatched,
-            )
-            n_by_source = n_total - n_matched
-        new_parts: list[tuple[str, DataFrame]] = []
+        upd = ins = None  # the new-row parts, staged as ONE write
         if when_matched == "update":
-            new_parts.append(
-                ("update", _project(matched_src, "when_matched='update'"))
+            upd = _project(
+                source.join(tgt_keys, on, "left_semi"),
+                "when_matched='update'",
             )
         elif isinstance(when_matched, dict):
             # plain (null-UNSAFE) equality, matching the delete
@@ -2683,46 +2662,92 @@ def merge_delta(
                 ],
                 "inner",
             )
-            new_parts.append(
-                (
-                    "update",
-                    joined.select(
-                        *[
-                            (
-                                (
-                                    F.expr(when_matched[c])
-                                    if isinstance(when_matched[c], str)
-                                    else when_matched[c]
-                                )
-                                .cast(fields[c].dataType)
-                                .alias(c)
-                                if c in when_matched
-                                else F.col(f"target.{c}").alias(c)
-                            )
-                            for c in out_cols
-                        ]
-                    ),
-                )
+            upd = joined.select(
+                *[
+                    (
+                        (
+                            F.expr(when_matched[c])
+                            if isinstance(when_matched[c], str)
+                            else when_matched[c]
+                        )
+                        .cast(fields[c].dataType)
+                        .alias(c)
+                        if c in when_matched
+                        else F.col(f"target.{c}").alias(c)
+                    )
+                    for c in out_cols
+                ]
             )
-        n_inserted = 0
         if when_not_matched == "insert":
-            new_parts.append(
-                (
-                    "insert",
-                    _project(
-                        source.join(tgt_keys, on, "left_anti"),
-                        "when_not_matched='insert'",
-                    ),
+            ins = _project(
+                source.join(tgt_keys, on, "left_anti"),
+                "when_not_matched='insert'",
+            )
+        n_src_matched = n_inserted = 0
+        if when_matched is not None or ins is not None:
+            # census — ONE job over source ⟕ target-key marker per
+            # key: the unmatched-row count IS rows_inserted, and a
+            # matched key's multiplicity is delta's
+            # multiple-source-rows-matched rule (ambiguous
+            # update/delete refuses loudly, before any DV is written)
+            per_key = (
+                source.join(
+                    tgt_keys.withColumn("__m", F.lit(1)), on, "left"
+                )
+                .groupBy(*on)
+                .agg(
+                    F.count(F.lit(1)).alias("__n"),
+                    F.max("__m").alias("__m"),
+                    F.struct(*on).alias("__key"),
                 )
             )
-        staged: dict[str, list] = {}
-        for kind, df_part in new_parts:
-            _check_constraints(
-                df_part, snap.metadata, f"merge_delta ({kind})"
+            hit_n = F.when(F.col("__m").isNotNull(), F.col("__n"))
+            census = per_key.agg(
+                F.sum(F.when(F.col("__m").isNull(), F.col("__n"))),
+                F.sum(hit_n),
+                F.max(hit_n),
+                F.max_by("__key", hit_n),
+            ).first()
+            n_unmatched, n_src_matched, worst, key = census
+            n_src_matched = int(n_src_matched or 0)
+            if when_matched is not None and (worst or 0) > 1:
+                raise ValueError(
+                    "merge_delta: multiple source rows match one "
+                    f"target row (e.g. key {key.asDict()}) — "
+                    "deduplicate the changelog first "
+                    "(dedupe_keep_latest)"
+                )
+            if ins is not None:
+                n_inserted = int(n_unmatched or 0)
+        actions: list[dict] = []
+        n_matched = 0
+        n_by_source = 0
+        del_matched = when_matched is not None and n_src_matched > 0
+        del_unmatched = when_not_matched_by_source == "delete"
+        if del_matched or del_unmatched:
+            actions, n_total, n_matched = _dv_delete_plan(
+                spark, table, snap, None, None, mmf,
+                what="merge_delta",
+                match_keys=source.select(*on),
+                delete_matched=del_matched,
+                delete_not_matched=del_unmatched,
             )
-            added = _stage_logical(df_part, table, snap)
-            staged[kind] = added
-            for rel, pv, sz, mtime_ms, st in added:
+            n_by_source = n_total - n_matched
+        if when_matched == "update" and ins is not None:
+            # matched ∪ unmatched is the whole source: no target read
+            new_rows = _project(source, "when_matched='update'")
+        else:
+            parts = [df for df in (upd, ins) if df is not None]
+            new_rows = reduce(DataFrame.unionByName, parts) if parts else None
+        if n_inserted or (upd is not None and n_src_matched):
+            # the cached source keeps its shuffle partitioning (AQE
+            # never re-plans a cached plan's output), so without a
+            # rebalance every non-empty partition would stage a file
+            new_rows = new_rows.hint("rebalance", *snap.partition_columns)
+            _check_constraints(new_rows, snap.metadata, "merge_delta")
+            for rel, pv, sz, mtime_ms, st in _stage_logical(
+                new_rows, table, snap
+            ):
                 add: dict = {
                     "path": rel,
                     "partitionValues": pv,
@@ -2733,8 +2758,6 @@ def merge_delta(
                 if st is not None:
                     add["stats"] = json.dumps(st, separators=(",", ":"))
                 actions.append({"add": add})
-        for rel, _pv, _sz, _mt, st in staged.get("insert", []):
-            n_inserted += int(st["numRecords"]) if st else 0
         if not actions:
             # nothing changed; a txn-stamped no-op still records the
             # high-water mark so replays stay cheap
@@ -2744,46 +2767,31 @@ def merge_delta(
         if _cdf_enabled(snap) and (
             n_matched or n_inserted or n_by_source
         ):
-            changes = None
+            changes: list[DataFrame] = []
 
             def _tag(df: DataFrame, t: str) -> DataFrame:
                 return df.withColumn("_change_type", F.lit(t))
 
             if when_matched is not None and n_matched:
-                pre = _tag(
+                changes.append(_tag(
                     target.join(source.select(*on), on, "left_semi"),
                     "update_preimage"
                     if when_matched != "delete"
                     else "delete",
-                )
-                changes = pre
-                if when_matched != "delete":
-                    post_src = new_parts[0][1]
-                    changes = changes.unionByName(
-                        _tag(post_src, "update_postimage")
-                    )
-            if when_not_matched == "insert" and n_inserted:
-                ins = _tag(
-                    _project(
-                        source.join(tgt_keys, on, "left_anti"), "insert"
-                    ),
-                    "insert",
-                )
-                changes = (
-                    ins if changes is None else changes.unionByName(ins)
-                )
+                ))
+                if upd is not None:
+                    changes.append(_tag(upd, "update_postimage"))
+            if ins is not None and n_inserted:
+                changes.append(_tag(ins, "insert"))
             if del_unmatched and n_by_source:
-                gone = _tag(
+                changes.append(_tag(
                     target.join(source.select(*on), on, "left_anti"),
                     "delete",
+                ))
+            if changes:
+                actions += _stage_cdc_actions(
+                    reduce(DataFrame.unionByName, changes), table, snap
                 )
-                changes = (
-                    gone
-                    if changes is None
-                    else changes.unionByName(gone)
-                )
-            if changes is not None:
-                actions += _stage_cdc_actions(changes, table, snap)
         if txn is not None:
             actions.append(
                 {

@@ -7,6 +7,7 @@ preimage/postimage pairs, and SetTransaction idempotence."""
 from __future__ import annotations
 
 import json
+from contextlib import contextmanager
 from pathlib import Path
 
 import pytest
@@ -346,3 +347,160 @@ def test_merge_by_source_cdf_emits_deletes(spark, tmp_path):
         (2, 99, "update_postimage"),
         (1, 10, "delete"),
     }
+
+
+def _upsert(target, source):
+    """Python-reconstructed upsert: every target row whose (non-null)
+    key some source row carries is replaced; every source row lands."""
+    src_keys = {r[0] for r in source if r[0] is not None}
+    return {r for r in target if r[0] not in src_keys} | set(source)
+
+
+def _commit_data_adds(path, version):
+    """The non-DV ``add`` actions of one commit: the data files it
+    staged (DV re-adds of touched files are bookkeeping, not data)."""
+    log = path / "_delta_log" / f"{version:020d}.json"
+    actions = [json.loads(ln) for ln in log.read_text().splitlines()]
+    return [
+        a["add"]
+        for a in actions
+        if "add" in a and "deletionVector" not in a["add"]
+    ]
+
+
+@contextmanager
+def _shuffle_partitions(spark, n):
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def _changelog(spark, n_keys, first_key):
+    """A CDC changelog shaped like a real one: two events per key,
+    reduced to the latest through dedupe_keep_latest — its window
+    shuffle leaves the source at spark.sql.shuffle.partitions."""
+    from pyspark.sql import functions as F
+
+    from snapflow_spark.operators.dedupe import dedupe_keep_latest
+
+    events = spark.createDataFrame(
+        [
+            (k, ts, k * 10 + ts, "ab"[k % 2])
+            for k in range(first_key, first_key + n_keys)
+            for ts in (1, 2)
+        ],
+        "id long, ts long, val long, grp string",
+    )
+    return dedupe_keep_latest(
+        events, keys=["id"], order_by=[F.col("ts").desc()]
+    ).drop("ts")
+
+
+@pytest.mark.parametrize("partition_by", [None, ["grp"]])
+def test_merge_upsert_stages_one_rebalanced_write(
+    spark, tmp_path, monkeypatch, partition_by
+):
+    """An upsert stages its new rows in ONE parquet write, rebalanced
+    so that a 32-partition changelog adds one file (one per touched
+    partition value when partitioned) — not one per non-empty shuffle
+    partition per clause."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    path = tmp_path / "t"
+    target = [(i, i, "ab"[i % 2]) for i in range(200)]
+    write_delta(
+        _tbl(spark, target).coalesce(1), path,
+        partition_by=partition_by,
+    )
+    v0 = delta_snapshot(spark, path).version
+    calls: list[str] = []
+    orig = DataFrameWriter.parquet
+
+    def spy(self, p, *a, **k):
+        calls.append(p)
+        return orig(self, p, *a, **k)
+
+    with _shuffle_partitions(spark, 32):
+        source = _changelog(spark, 200, 100)  # 100 match, 100 new
+        expected = _upsert(
+            target, [(r.id, r.val, r.grp) for r in source.collect()]
+        )
+        monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+        res = merge_delta(spark, path, source, on=["id"])
+        monkeypatch.undo()
+    assert res == {"rows_matched": 100, "rows_inserted": 100}
+    assert len(calls) == 1, f"staged writes: {calls}"
+    adds = _commit_data_adds(path, v0 + 1)
+    if partition_by:
+        values = [a["partitionValues"]["grp"] for a in adds]
+        assert sorted(values) == ["a", "b"], values
+    else:
+        assert len(adds) == 1, [a["path"] for a in adds]
+    assert _state(spark, path) == expected
+
+
+@pytest.mark.parametrize("shuffle_partitions", [8, 64])
+def test_merge_files_added_independent_of_shuffle_partitions(
+    spark, tmp_path, shuffle_partitions
+):
+    """The number of files one small upsert adds does not follow
+    spark.sql.shuffle.partitions: the staged write is rebalanced, so
+    AQE sizes its files by bytes, whatever the source's partitioning."""
+    path = tmp_path / "t"
+    write_delta(_tbl(spark, [(i, i, "a") for i in range(50)]), path)
+    v0 = delta_snapshot(spark, path).version
+    with _shuffle_partitions(spark, shuffle_partitions):
+        res = merge_delta(spark, path, _changelog(spark, 100, 25), on=["id"])
+    assert res == {"rows_matched": 25, "rows_inserted": 75}
+    assert len(_commit_data_adds(path, v0 + 1)) == 1
+
+
+def test_merge_null_keys_never_match_and_insert(spark, tmp_path):
+    path = tmp_path / "t"
+    target = [(None, 5, "a"), (1, 10, "a"), (2, 20, "b")]
+    write_delta(_tbl(spark, target), path)
+    source = [(None, 7, "b"), (None, 8, "c"), (1, 11, "a"), (3, 30, "b")]
+    res = merge_delta(spark, path, _tbl(spark, source), on=["id"])
+    # the null-keyed rows match neither the null-keyed target row nor
+    # each other: both insert (and are not a multiple-match)
+    assert res == {"rows_matched": 1, "rows_inserted": 3}
+    assert _state(spark, path) == _upsert(target, source)
+
+
+def test_merge_unmatched_duplicate_keys_insert(spark, tmp_path):
+    path = tmp_path / "t"
+    target = [(1, 1, "a")]
+    write_delta(_tbl(spark, target), path)
+    source = [(5, 50, "a"), (5, 51, "b"), (1, 2, "a")]
+    res = merge_delta(spark, path, _tbl(spark, source), on=["id"])
+    assert res == {"rows_matched": 1, "rows_inserted": 2}
+    assert _state(spark, path) == _upsert(target, source)
+
+
+def test_merge_matched_duplicate_keys_raise_naming_the_key(
+    spark, tmp_path
+):
+    path = tmp_path / "t"
+    target = [(1, 1, "a"), (2, 2, "a")]
+    write_delta(_tbl(spark, target), path)
+    v0 = delta_snapshot(spark, path).version
+    source = [(2, 20, "a"), (2, 21, "a"), (7, 7, "b"), (7, 8, "b")]
+    with pytest.raises(ValueError, match=r"multiple source rows.*'id': 2"):
+        merge_delta(spark, path, _tbl(spark, source), on=["id"])
+    # refused before anything was staged or committed
+    assert delta_snapshot(spark, path).version == v0
+    assert _state(spark, path) == set(target)
+
+
+def test_merge_two_live_target_rows_for_one_key(spark, tmp_path):
+    path = tmp_path / "t"
+    target = [(1, 10, "a"), (2, 20, "a"), (1, 11, "b")]
+    write_delta(_tbl(spark, target[:2]), path)
+    write_delta(_tbl(spark, target[2:]), path, mode="append")
+    source = [(1, 99, "z")]
+    res = merge_delta(spark, path, _tbl(spark, source), on=["id"])
+    assert res == {"rows_matched": 2, "rows_inserted": 0}
+    assert _state(spark, path) == _upsert(target, source)
